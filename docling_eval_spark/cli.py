@@ -49,8 +49,7 @@ def cmd_create_gt(args) -> None:
 
 
 def cmd_create_eval(args) -> None:
-    from .operators.lineage import append_lineage
-    from .operators.resume import resume_filter
+    from .operators.resume import commit, resume_filter
     from .plans.pipeline import extract_and_score
 
     spark = _spark(args.cpus)
@@ -58,17 +57,8 @@ def cmd_create_eval(args) -> None:
     if args.resume:
         pages = resume_filter(pages, spark, args.output, key="url")
     scored = extract_and_score(pages, n_partitions=args.partitions)
-    scored = scored.drop("spans", "tables")
-    if args.lineage:
-        # lineage must account for exactly THIS run's rows: persist the
-        # scored frame so the write and the lineage rollup share one
-        # computation instead of re-reading the cumulative output
-        scored = scored.persist()
-    scored.write.mode("append").parquet(args.output)
-    if args.lineage:
-        append_lineage(scored, args.run_id or "cli", args.lineage)
-        scored.unpersist()
-    n = spark.read.parquet(args.output).count()
+    n, _ = commit(scored.drop("spans", "tables"), args.output, args.lineage,
+                  args.run_id or "cli")
     print(f"create-eval: {n} scored rows committed to {args.output}")
 
 

@@ -16,12 +16,16 @@ mapInPandas stage:
 
 Output schema keeps the oracle `text` column alongside `extracted_text`
 so scoring is a column-local comparison, plus the span rows and table
-subtrees feeding the layout/TEDS evaluators.
+subtrees feeding the layout/TEDS evaluators. `extract_frame` is the one
+per-doc loop; the blob operator here (optionally scoring each batch in
+place) and the flagship's fused synth operator (plans/pipeline.py) both
+run it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -45,36 +49,37 @@ def extract_schema(key_dtype: str = "bigint") -> str:
     return EXTRACT_SCHEMA.replace("doc_id bigint", f"doc_id {key_dtype}", 1)
 
 
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def extract_frame(pdf: pd.DataFrame, html: Iterable) -> pd.DataFrame:
+    """The per-doc extraction loop every extraction operator runs: one
+    output row per page of `html`, with `pdf`'s doc_id/url/lang/text
+    carried through so GT and prediction stay in the same row."""
+    out = {"extracted_text": [], "n_blocks": [], "n_content": [],
+           "n_boiler": [], "tables": [], "spans": []}
+    for page in html:
+        # a null page (bad upstream row) degrades to empty extraction
+        # instead of TypeError-killing the executor task
+        raw = b"" if page is None else bytes(page)
+        r = extract_main_text(raw.decode("utf-8", errors="replace"))
+        out["extracted_text"].append(r["text"])
+        for c in ("n_blocks", "n_content", "n_boiler", "tables", "spans"):
+            out[c].append(r[c])
+    return pd.DataFrame({"doc_id": pdf["doc_id"], "url": pdf["url"],
+                         "lang": pdf["lang"], "text": pdf["text"], **out})
+
+
+def _extract_batches(it: Iterator[pd.DataFrame], score=None) -> Iterator[pd.DataFrame]:
     for pdf in it:
-        out = {
-            "doc_id": pdf["doc_id"],
-            "url": pdf["url"],
-            "lang": pdf["lang"],
-            "text": pdf["text"],
-            "extracted_text": [],
-            "n_blocks": [],
-            "n_content": [],
-            "n_boiler": [],
-            "tables": [],
-            "spans": [],
-        }
-        for html in pdf["html"]:
-            # a null page (bad upstream row) degrades to empty extraction
-            # instead of TypeError-killing the executor task
-            raw = b"" if html is None else bytes(html)
-            r = extract_main_text(raw.decode("utf-8", errors="replace"))
-            out["extracted_text"].append(r["text"])
-            out["n_blocks"].append(r["n_blocks"])
-            out["n_content"].append(r["n_content"])
-            out["n_boiler"].append(r["n_boiler"])
-            out["tables"].append(r["tables"])
-            out["spans"].append(r["spans"])
-        yield pd.DataFrame(out)
+        frame = extract_frame(pdf, pdf["html"])
+        yield frame if score is None else score(frame)
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
+def extract_pages(pages: DataFrame, score=None, score_schema: str = "") -> DataFrame:
     """pages(url, warc_ts, html, text, lang[, doc_id]) -> extraction rows.
+
+    `score`, when given, maps each extracted pandas batch to the same
+    batch with the `score_schema` columns appended. It runs inside the
+    same Python operator, so extract -> score crosses the Arrow boundary
+    once and the html never comes back to the JVM.
 
     Fails fast at plan time when a required column is absent (a KeyError
     inside the executor UDF is much harder to diagnose); a missing doc_id
@@ -88,7 +93,8 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 
     if "doc_id" not in pages.columns:
         pages = pages.withColumn("doc_id", F.lit(-1).cast("bigint"))
+    schema = extract_schema(dict(pages.dtypes)["doc_id"])
     return pages.select("doc_id", *required).mapInPandas(
-        _extract_batches,
-        schema=extract_schema(dict(pages.dtypes)["doc_id"]),
+        partial(_extract_batches, score=score),
+        schema=f"{schema}, {score_schema}" if score else schema,
     )

@@ -3,11 +3,12 @@
 Rebuild analog of the reference's rejected_samples counters and
 dataset_infos.json (SURVEY.md §2.4 A3, §2.1 S7): every extraction run
 appends one row per task partition to a lineage table —
-(run_id, partition_id, n_rows, n_ok, n_reject, total_bytes) — so a 100 TB
-job is auditable per task and a resume can account for exactly what was
-committed. Computed as a plain groupBy over spark_partition_id(): no
-second pass over the data, piggybacks on the already-materialized
-extraction output.
+(run_id, partition_id, n_rows, n_ok, n_reject) — so a 100 TB job is
+auditable per task and a resume can account for exactly what was
+committed: summed over runs, n_rows and n_ok are the committed output's
+row and byte-identical counts. Computed as a plain groupBy over
+spark_partition_id(): no second pass over the data, piggybacks on the
+already-materialized extraction output (operators/resume.py `commit`).
 """
 
 from __future__ import annotations

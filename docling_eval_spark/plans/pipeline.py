@@ -1,21 +1,23 @@
 """The flagship job: extract main content from every page and score it
 against the reference text (SURVEY.md §7 minimum end-to-end slice).
 
-Stages (scan -> UDF -> column ops -> agg -> two sinks):
+Stages (scan -> ONE Python operator -> column ops -> agg -> sinks):
   1. pages (input_hint schema) — from the deterministic corpus generator
      or any parquet/Iceberg table with that schema.
   2. size-balanced salted repartition (operators/skew.py).
-  3. extraction mapInPandas (extraction/extract.py) — GT text rides along,
-     so scoring never joins (the reference's co-located J1 pairing).
-  4. scoring:
-       - byte_identical: native column equality — the 100% gate is pure
-         JVM, no Python;
-       - the markdown metric suite (BLEU/F1/edit/METEOR/CER) as ONE
-         Arrow-batched pandas UDF with an identity fast path (identical
-         pair -> closed-form scores, no DP run) — on a corpus that's
-         mostly byte-identical the slow path touches only the tail.
-  5. rollups: DatasetStatistics per metric (operators/stats_rollup.py)
-     + per-partition lineage rows (operators/lineage.py).
+  3. extract -> score as ONE mapInPandas: each Arrow batch is extracted
+     (extraction/extract.py `extract_frame`) and then scored in place by
+     `_score_batches` — GT text rides along, so scoring never joins (the
+     reference's co-located J1 pairing), and the batch crosses the Arrow
+     boundary once. The scorer is the markdown metric suite
+     (BLEU/F1/edit/METEOR/CER) with an identity fast path (identical
+     pair -> closed-form scores, no DP run), so on a mostly
+     byte-identical corpus the slow path touches only the tail.
+  4. byte_identical: native column equality — the 100% gate is pure
+     JVM, no Python.
+  5. sinks: DatasetStatistics per metric (operators/stats_rollup.py), or
+     the job's commit (operators/resume.py `commit`): scored rows plus
+     per-partition lineage rows (operators/lineage.py) from one computation.
 
 Scoring parity: reference evaluators/markdown_text_evaluator.py:164-185
 (per-doc metric dict), evaluators/stats.py:77-97 (dataset rollup).
@@ -30,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus.generator import pages_from_documents
-from ..extraction.extract import extract_pages
+from ..extraction.extract import extract_frame, extract_pages
 from ..functions.text_metrics import cer, score_text_pair
 from ..operators.skew import size_balanced_repartition
 
@@ -46,8 +48,9 @@ _IDENTITY_SCORES = {
 def _score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Passthrough scorer: appends metric columns to each extraction batch.
 
-    One UDF stage, no join — GT and prediction are columns of the same row
-    (the reference's co-located J1 pairing), so scoring never shuffles.
+    Runs inside the extracting Python operator (extract_and_score,
+    _fused_batches), no join — GT and prediction are columns of the same
+    row (the reference's co-located J1 pairing), so scoring never shuffles.
     """
     for pdf in it:
         rows = []
@@ -74,25 +77,25 @@ def _score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield out
 
 
-def score_extractions(extracted: DataFrame, full_metrics: bool = True) -> DataFrame:
-    """Per-doc scored rows: byte_identical natively (JVM) + metric suite
-    appended by a passthrough mapInPandas (no join, no UDF recompute)."""
-    if full_metrics:
-        from ..extraction.extract import extract_schema
-
-        base = extract_schema(dict(extracted.dtypes)["doc_id"])
-        extracted = extracted.mapInPandas(
-            _score_batches, schema=f"{base}, {_SCORE_SCHEMA}"
-        )
-    return extracted.withColumn(
-        "byte_identical", F.col("extracted_text") == F.col("text")
-    )
+def _score_frame(frame: pd.DataFrame) -> pd.DataFrame:
+    """Score one extracted batch. Handing `_score_batches` a ready frame
+    (not the upstream iterator) keeps extraction out of its profile."""
+    return next(_score_batches(iter([frame])))
 
 
 def extract_and_score(pages: DataFrame, n_partitions: int = 32,
                       full_metrics: bool = True) -> DataFrame:
+    """pages with materialized html blobs -> scored rows, in one Python
+    operator after the size-balanced shuffle. `full_metrics=False` keeps
+    the extraction product and byte_identical only (no GT-relative
+    metric suite)."""
     balanced = size_balanced_repartition(pages, n_partitions)
-    return score_extractions(extract_pages(balanced), full_metrics=full_metrics)
+    extracted = extract_pages(balanced,
+                              score=_score_frame if full_metrics else None,
+                              score_schema=_SCORE_SCHEMA)
+    return extracted.withColumn(
+        "byte_identical", F.col("extracted_text") == F.col("text")
+    )
 
 
 def _fused_batches(full_metrics: bool):
@@ -106,31 +109,15 @@ def _fused_batches(full_metrics: bool):
     so the only Arrow traffic is light metric/text columns.
     """
     from ..corpus.html_synth import synth_html, url_for
-    from ..extraction.boilerplate import extract_main_text
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "url": [url_for(int(i)) for i in pdf["doc_id"]],
-                "lang": pdf["lang"],
-                "text": pdf["text"],
-                "extracted_text": [], "n_blocks": [], "n_content": [],
-                "n_boiler": [], "tables": [], "spans": [],
-            }
-            for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                html = synth_html(int(i), t, l).decode("utf-8")
-                r = extract_main_text(html)
-                out["extracted_text"].append(r["text"])
-                out["n_blocks"].append(r["n_blocks"])
-                out["n_content"].append(r["n_content"])
-                out["n_boiler"].append(r["n_boiler"])
-                out["tables"].append(r["tables"])
-                out["spans"].append(r["spans"])
-            pdf_out = pd.DataFrame(out)
-            if full_metrics:
-                pdf_out = next(_score_batches(iter([pdf_out])))
-            yield pdf_out
+            ids = [int(i) for i in pdf["doc_id"]]
+            html = (synth_html(i, t, l)
+                    for i, t, l in zip(ids, pdf["text"], pdf["lang"]))
+            frame = extract_frame(pdf.assign(url=[url_for(i) for i in ids]),
+                                  html)
+            yield _score_frame(frame) if full_metrics else frame
 
     return gen
 

@@ -7,13 +7,18 @@
         --checkpoint-resume --run-id <id> [--partitions N]
 
 Pipeline (north rule): scan -> resume anti-join on committed urls ->
-size-balanced salted repartition -> fused extract+score mapInPandas ->
-append scored rows + per-partition lineage sidecar. Idempotent restart:
-a killed job re-submitted with --checkpoint-resume skips everything the
-committed output already contains. On an Iceberg deployment the
-parquet read/append below become `spark.table(...)` /
-`writeTo(...).append()` and the snapshot IS the checkpoint — the plan
-shape is identical (operators/resume.py docstring).
+size-balanced salted repartition -> ONE extract+score mapInPandas ->
+commit (operators/resume.py `commit`: append scored rows + per-partition
+lineage sidecar, this run's counts observed on the write). Idempotent
+restart: a killed job re-submitted with --checkpoint-resume skips
+everything the committed output already contains; the keys-only
+anti-join is the only read of that output. The closing line reports the
+cumulative committed and byte-identical counts summed from the lineage
+sidecar (one row per partition per run), not from re-reading the
+output. On an Iceberg deployment the parquet read/append below become
+`spark.table(...)` / `writeTo(...).append()` and the snapshot IS the
+checkpoint — the plan shape is identical (operators/resume.py
+docstring).
 
 Synthetic mode (--synth-from DIR) generates the pages table from the
 documents parquet for hermetic runs/benchmarks.
@@ -49,9 +54,9 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> None:
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
-    from docling_eval_spark.operators.lineage import append_lineage
-    from docling_eval_spark.operators.resume import resume_filter
+    from docling_eval_spark.operators.resume import commit, committed_keys, resume_filter
     from docling_eval_spark.plans.pipeline import extract_and_score, flagship
 
     spark = SparkSession.builder.appName("extract-job").getOrCreate()
@@ -60,23 +65,16 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> None:
     run_id = args.run_id or f"run-{int(time.time())}"
 
     if args.synth_from:
-        exclude = None
-        if args.checkpoint_resume:
-            from docling_eval_spark.operators.resume import committed_keys
-
-            exclude = committed_keys(spark, args.output, key="doc_id")
+        exclude = (committed_keys(spark, args.output, key="doc_id")
+                   if args.checkpoint_resume else None)
         scored = flagship(spark, args.synth_from, n_partitions=n_parts,
                           exclude=exclude)
-        key = "doc_id"
     elif args.input:
         pages = spark.read.parquet(args.input)
         if args.checkpoint_resume:
             pages = resume_filter(pages, spark, args.output, key="url")
         scored = extract_and_score(pages, n_partitions=n_parts)
-        key = "url"
     elif args.input_warc:
-        from pyspark.sql import functions as F
-
         from docling_eval_spark.sources.binary_files import read_binary_files
         from docling_eval_spark.sources.warc import warc_records
 
@@ -118,30 +116,21 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> None:
             F.lit("").alias("text"), F.lit("").alias("lang"))
         if args.checkpoint_resume:
             pages = resume_filter(pages, spark, args.output, key="url")
-        scored = extract_and_score(pages, n_partitions=n_parts)
         # a raw crawl has no ground-truth text: keep the extraction
-        # product, drop the GT-relative metric columns rather than
-        # reporting scores against an empty reference
+        # product only, no scores against an empty reference
+        scored = extract_and_score(pages, n_partitions=n_parts,
+                                   full_metrics=False)
         keep = ["doc_id", "url", "lang", "extracted_text",
-                "n_blocks", "n_content", "n_boiler", "spans", "tables"]
-        scored = scored.select(*[c for c in keep if c in scored.columns]) \
-            .withColumn("byte_identical", F.lit(False))
-        key = "url"
+                "n_blocks", "n_content", "n_boiler"]
+        scored = scored.select(*keep).withColumn("byte_identical", F.lit(False))
     else:
         ap.error("one of --input / --input-warc / --synth-from is required")
         return
 
-    out_cols = [c for c in scored.columns if c not in ("spans", "tables")]
-    scored = scored.select(*out_cols).persist()
-    scored.write.mode("append").parquet(args.output)
-    # lineage rows describe THIS run's task partitions, not the cumulative
-    # table — the persist shares one computation between write and rollup
-    append_lineage(scored, run_id, args.lineage)
-    scored.unpersist()
-
-    committed = spark.read.parquet(args.output)
-    n = committed.count()
-    ok = committed.where("byte_identical").count()
+    commit(scored.drop("spans", "tables"), args.output, args.lineage, run_id)
+    totals = spark.read.parquet(args.lineage).agg(
+        F.sum("n_rows"), F.sum("n_ok")).first()
+    n, ok = totals[0] or 0, totals[1] or 0
     print(f"extract-job run_id={run_id} committed={n} byte_identical={ok} "
           f"rate={ok / max(n, 1):.6f}")
     if stop_session:  # in-process callers (tests) keep their session
