@@ -43,8 +43,7 @@ def cmd_create_gt(args) -> None:
     spark = _spark(args.cpus)
     pages = pages_from_documents(spark, args.from_documents,
                                  n_partitions=args.partitions)
-    write_pages_table(pages, args.output, mode="overwrite")
-    n = spark.read.parquet(args.output).count()
+    n = write_pages_table(pages, args.output, mode="overwrite")
     print(f"create-gt: wrote {n} pages to {args.output}")
 
 
@@ -202,9 +201,11 @@ def cmd_pack(args) -> None:
     concatenation-pack the token stream into `--ctx`-token context
     windows IN SHUFFLED ORDER. Writes a per-document manifest
     (doc_id, shuffle_pos, n_tokens, tok_start, seq_first, seq_last)
-    a data loader can range-scan per sequence id, plus a JSON summary.
-    Both stages are the distributed prefix-sum plans — no global sort
-    anywhere (operators/webtext.py pack_sequences / epoch_shuffle)."""
+    a data loader can range-scan per sequence id, plus a JSON summary
+    observed on the manifest write (no read-back). Both stages are the
+    distributed prefix-sum plans — no global sort anywhere
+    (operators/webtext.py pack_sequences / epoch_shuffle)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .operators.webtext import epoch_shuffle, pack_sequences
@@ -231,20 +232,13 @@ def cmd_pack(args) -> None:
         .join(packed, "shuffle_pos")
         .select(args.key, "shuffle_pos", "n_tokens", "tok_start",
                 "seq_first", "seq_last"))
-    manifest.write.mode("overwrite").parquet(args.output)
-
-    written = spark.read.parquet(args.output)
-    stats = written.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.max("seq_last").alias("last_seq")).collect()[0]
-    summary = {
-        "n_docs": int(stats["n_docs"]),
-        "n_tokens": int(stats["n_tokens"] or 0),
-        "n_sequences": int(stats["last_seq"] or -1) + 1,
-        "ctx": args.ctx,
-        "seed": args.seed,
-    }
+    obs = Observation()
+    manifest.observe(
+        obs, F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("n_tokens"),
+        F.coalesce(F.max("seq_last") + 1, F.lit(0)).alias("n_sequences")) \
+        .write.mode("overwrite").parquet(args.output)
+    summary = {**obs.get, "ctx": args.ctx, "seed": args.seed}
     if args.summary:
         with open(args.summary, "w") as f:
             json.dump(summary, f, indent=1)
@@ -253,17 +247,26 @@ def cmd_pack(args) -> None:
 
 def cmd_curate(args) -> None:
     """Web-corpus curation pass over an extracted table:
-    [hash-sample] -> [normalize] -> Gopher quality gate -> C4
-    line/page filters -> PII redaction -> corpus-level line dedup ->
-    [benchmark decontamination], writing the curated table plus a
-    JSON drop-accounting summary. Cheapest-first ordering: the
+    [hash-sample] -> [url dedup] -> [robots.txt] -> [normalize] ->
+    [lang-id] -> Gopher quality gate -> C4 line/page filters -> PII
+    redaction -> corpus-level line dedup -> [benchmark
+    decontamination], writing the curated table plus a JSON
+    drop-accounting summary. Cheapest-first ordering: the
     deterministic sample evaluates at the scan (everything downstream
     scales with the rate), the per-row quality gates shrink the corpus
     BEFORE the shuffle-bearing passes, and the decontamination probe
     runs last over survivors only — at 100 TB each stage pays only for
-    what the previous stages kept."""
+    what the previous stages kept.
+
+    The summary comes from the output write, with no count() and no
+    read-back: a DataFrame.observe row count at each stage boundary,
+    inside the persisted redacted subplan or on one branch of the write
+    above it, plus the PII and normalize sums and the output's line
+    sums. A dropped count is the difference of two observed counts."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from .operators.caching import release_caches
     from .operators.webtext import (
         c4_page_filter,
         corpus_line_dedup,
@@ -276,24 +279,27 @@ def cmd_curate(args) -> None:
     spark = _spark(args.cpus)
     docs = spark.read.parquet(args.input)
     key, text = args.key, args.text_col
+    stages: dict[str, Observation] = {}
+
+    def observe(df, stage, **sums):
+        stages[stage] = Observation()
+        return df.observe(stages[stage], F.count(F.lit(1)).alias("n"), *(
+            F.coalesce(F.sum(c), F.lit(0)).alias(k) for k, c in sums.items()))
+
     if args.sample is not None:
         docs = hash_sample(docs, key=key, rate=args.sample,
                            salt=args.sample_salt)
-    n_input = docs.count()
-
-    kept = docs
-    n_url_dropped = 0
+    kept = observe(docs, "input")
     if args.url_dedup:
         # RefinedWeb's FIRST stage: exact dedup on the canonical URL —
         # cheapest possible gate (native expressions + one hash groupBy
         # on short strings), shrinking everything downstream
         from .operators.webtext import url_dedup
 
-        deduped = url_dedup(kept, key=key, url_col=args.url_col)
-        kept = deduped.where("url_keep_first").drop(
-            "url_norm", "n_same_url", "url_keep_first")
-        n_url_dropped = n_input - kept.count()
-    n_robots_dropped = 0
+        kept = observe(url_dedup(kept, key=key, url_col=args.url_col)
+                       .where("url_keep_first")
+                       .drop("url_norm", "n_same_url", "url_keep_first"),
+                       "url")
     if args.robots_txt:
         # REP compliance gate (RFC 9309): drop pages whose domain's
         # robots.txt disallows the agent — right after URL dedup so the
@@ -303,19 +309,16 @@ def cmd_curate(args) -> None:
 
         robots = spark.read.parquet(args.robots_txt)
         rules = compile_robots(robots, agent=args.robots_agent)
-        before = kept.count()
-        kept = (with_robots_verdict(kept, rules, url_col=args.url_col)
-                .where("robots_txt_allowed")
-                .drop("robots_txt_allowed", "domain"))
-        n_robots_dropped = before - kept.count()
+        kept = observe(with_robots_verdict(kept, rules, url_col=args.url_col)
+                       .where("robots_txt_allowed")
+                       .drop("robots_txt_allowed", "domain"), "robots")
     if args.normalize:
         # replace the text column; keep the changed flag through the
-        # gates so the PII aggregation pass can count it for free
+        # gates so the redacted frame's observation can sum it
         kept = (normalize_text(kept, text_col=text, keep_newlines=True)
                 .drop(text)
                 .withColumnRenamed("text_norm", text)
                 .withColumnRenamed("text_norm_changed", "_norm_changed"))
-    n_lang_dropped = 0
     if args.lang_id:
         # CCNet stage ordering: language-ID the page BEFORE the quality
         # and perplexity machinery (the classifier is one Arrow stage;
@@ -327,9 +330,8 @@ def cmd_curate(args) -> None:
         kept = with_lang_id_classifier(kept, text_col=text)
         if args.lang_keep:
             wanted = [l.strip() for l in args.lang_keep.split(",") if l.strip()]
-            before = kept.count()
-            kept = kept.where(F.col("langid_lang").isin(wanted))
-            n_lang_dropped = before - kept.count()
+            kept = observe(kept.where(F.col("langid_lang").isin(wanted)),
+                           "lang")
     if not args.skip_gopher:
         flagged = with_gopher_quality(kept, text_col=text,
                                       min_words=args.min_words)
@@ -352,17 +354,17 @@ def cmd_curate(args) -> None:
         kept = (c4.where("keep")
                 .drop(text, "keep", "n_lines", "n_kept_lines")
                 .withColumnRenamed("text_clean", text))
-    red = redact_pii(kept, text_col=text, out_col=text) \
-        .persist()
-    n_after_filters = red.count()  # materialize before the dedup fan-out
+    sums = {"emails": "n_emails", "ips": "n_ips", "phones": "n_phones"}
+    if args.normalize:
+        sums["normalized_changed"] = F.col("_norm_changed").cast("int")
+    # persisted: the line dedup and the join below both read it
+    red = observe(redact_pii(kept, text_col=text, out_col=text),
+                  "filtered", **sums).persist()
 
     deduped = corpus_line_dedup(red, key=key, text_col=text, sep=args.sep)
-    payload = red.drop(text, "_norm_changed") if args.normalize \
-        else red.drop(text)
-    out = (payload.join(deduped, key)
+    out = (red.drop(text, "_norm_changed").join(deduped, key)
            .where(F.col("n_kept") > 0))
 
-    n_contaminated = 0
     if args.decontaminate:
         from .operators.webtext import ngram_contamination
 
@@ -371,43 +373,43 @@ def cmd_curate(args) -> None:
             out, bench, n=args.decontam_n, key=key, text_col=text,
             bench_text_col=args.decontam_text_col)
         bad = flags.where("contaminated").select(key)
-        n_contaminated = bad.count()
-        out = out.join(bad, key, "left_anti")
-    out.write.mode("overwrite").parquet(args.output)
+        out = observe(out, "decontaminate").join(bad, key, "left_anti")
+    try:
+        observe(out, "output", lines_seen="n_lines", lines_kept="n_kept") \
+            .write.mode("overwrite").parquet(args.output)
+    finally:
+        red.unpersist()
+        release_caches(deduped)
 
-    curated = spark.read.parquet(args.output)
-    aggs = [F.sum("n_emails").alias("e"), F.sum("n_ips").alias("i"),
-            F.sum("n_phones").alias("p")]
-    if args.normalize:
-        aggs.append(
-            F.sum(F.col("_norm_changed").cast("int")).alias("nc"))
-    pii = red.agg(*aggs).collect()[0]
-    lines = curated.agg(F.sum("n_lines").alias("t"),
-                        F.sum("n_kept").alias("k")).collect()[0]
+    # a stage that adaptive execution drops from the plan reports an
+    # empty row; here only a stage with no rows is dropped (the url
+    # dedup's self-join of an empty input)
+    seen = {stage: obs.get if obs._jo.getRow().length() else {"n": 0}
+            for stage, obs in stages.items()}
+    order = list(seen)
+    dropped = {stage: seen[prev]["n"] - seen[stage]["n"]
+               for prev, stage in zip(order, order[1:])}
+    filtered, output = seen["filtered"], seen["output"]
     summary = {
-        "n_input": n_input,
-        "n_after_quality_filters": n_after_filters,
-        "n_output": curated.count(),
-        "pii_redacted": {"emails": int(pii["e"] or 0),
-                         "ips": int(pii["i"] or 0),
-                         "phones": int(pii["p"] or 0)},
-        "lines_seen": int(lines["t"] or 0),
-        "lines_kept": int(lines["k"] or 0),
+        "n_input": seen["input"]["n"],
+        "n_after_quality_filters": filtered["n"],
+        "n_output": output["n"],
+        "pii_redacted": {k: filtered[k] for k in ("emails", "ips", "phones")},
+        "lines_seen": output["lines_seen"],
+        "lines_kept": output["lines_kept"],
     }
     if args.sample is not None:
         summary["sample_rate"] = args.sample
     if args.url_dedup:
-        summary["n_url_duplicates_dropped"] = n_url_dropped
+        summary["n_url_duplicates_dropped"] = dropped["url"]
     if args.robots_txt:
-        summary["n_robots_disallowed_dropped"] = n_robots_dropped
+        summary["n_robots_disallowed_dropped"] = dropped["robots"]
     if args.lang_id:
-        summary["n_lang_dropped"] = n_lang_dropped
+        summary["n_lang_dropped"] = dropped.get("lang", 0)
     if args.normalize:
-        summary["normalized_changed"] = int(pii["nc"] or 0)
+        summary["normalized_changed"] = filtered["normalized_changed"]
     if args.decontaminate:
-        summary["n_contaminated_dropped"] = n_contaminated
-    red.unpersist()
-    spark.catalog.clearCache()
+        summary["n_contaminated_dropped"] = dropped["output"]
     if args.summary:
         with open(args.summary, "w") as f:
             json.dump(summary, f, indent=1)
@@ -506,7 +508,6 @@ def main(argv: list[str] | None = None) -> None:
     cu.add_argument("--decontam-n", type=int, default=13)
     cu.add_argument("--decontam-text-col", default="text")
     cu.add_argument("--summary", default=None)
-    cu.add_argument("--partitions", type=int, default=None)
     cu.set_defaults(fn=cmd_curate)
 
     pk = sub.add_parser("pack")

@@ -108,6 +108,10 @@ def with_lang_id_classifier(df: DataFrame, text_col: str = "text",
         return pd.DataFrame({"lang": langs,
                              "conf": conf.astype("float64")})
 
+    # nondeterministic to the optimizer only: a deterministic UDF is
+    # copied into each filter on its output pushed below this projection
+    # (curate --lang-keep), which scores every row twice
+    _score = _score.asNondeterministic()
     scored = df.withColumn("_lid", _score(F.col(text_col)))
     return (scored
             .withColumn(f"{out_prefix}lang", F.col("_lid.lang"))

@@ -94,8 +94,7 @@ def with_word_lines(df: DataFrame, text_col: str = "text",
 
 
 def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
-                      text_col: str = "text", sep: str = "\n",
-                      persist_intermediate: bool = True) -> DataFrame:
+                      text_col: str = "text", sep: str = "\n") -> DataFrame:
     """CCNet-style corpus-level duplicate-line removal.
 
     Reference pipeline analog: CCNet section 3.1 deduplicates Common
@@ -122,12 +121,11 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
          non-blank split), not by re-aggregating the exploded frame.
 
     The int-only exploded frame has two consumers (winner aggregation
-    and winner join); with `persist_intermediate` (default) it is
-    persisted and count()-materialized in its own job first, so the
-    text-splitting subtree executes exactly once (a persist alone does
-    not stop concurrent first computations racing — see
-    operators/dedup.py). The per-doc keep_pos frame stays persisted in
-    the returned plan; release it with
+    and winner join); it is persisted and count()-materialized in its
+    own job first, so the text-splitting subtree executes exactly once
+    (a persist alone does not stop concurrent first computations racing
+    — see operators/dedup.py). The per-doc keep_pos frame stays
+    persisted in the returned plan; release it with
     operators.caching.release_caches(result) when the result is
     consumed.
 
@@ -159,9 +157,8 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             F.xxhash64("line").alias("line_key"),
         )
     )
-    if persist_intermediate:
-        ex = ex.persist()
-        ex.count()
+    ex = ex.persist()
+    ex.count()
     winners = ex.groupBy("line_key").agg(F.min("packed").alias("win"))
     kept_pos = (
         ex.join(winners, "line_key")
@@ -172,10 +169,9 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             F.array_sort(F.collect_list("pos")).alias("_keep_pos"),
         )
     )
-    if persist_intermediate:
-        kept_pos = kept_pos.persist()
-        kept_pos.count()  # materialize before releasing the line cache
-        ex.unpersist()
+    kept_pos = kept_pos.persist()
+    kept_pos.count()  # materialize before releasing the line cache
+    ex.unpersist()
     src = df.withColumn("_ls", lines)
     arr = F.col("_ls")
     text = F.when(F.col("_keep_pos").isNull(), F.lit("")).otherwise(
@@ -191,10 +187,8 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             text.alias("text"),
         )
     )
-    if persist_intermediate:
-        from .caching import track_caches
-        out = track_caches(out, kept_pos)
-    return out
+    from .caching import track_caches
+    return track_caches(out, kept_pos)
 
 
 def with_gopher_quality(df: DataFrame, text_col: str = "text",
@@ -408,8 +402,8 @@ GOPHER_REPETITION_THRESHOLDS = {
 def full_repetition_stats(df: DataFrame, key: str = "doc_id",
                           text_col: str = "text", line_sep: str = "\n",
                           para_sep: str = "\n\n",
-                          thresholds: dict[str, float] | None = None,
-                          persist_intermediate: bool = True) -> DataFrame:
+                          thresholds: dict[str, float] | None = None
+                          ) -> DataFrame:
     """The COMPLETE Gopher repetition rule set (Rae et al. 2021, A1.1,
     all 13 published thresholds): duplicate line/paragraph fractions
     (row and character), top-{2,3,4}-gram character fractions, and
@@ -420,8 +414,8 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     Plan shape — built for ONE corpus scan, not thirteen:
       * the text splits once into (words, lines, paragraphs); lines
         derive from the paragraphs columnar, so the base projection is
-        a single pass (persisted + count()-materialized by default —
-        three downstream subtrees consume it);
+        a single pass (persisted + count()-materialized — three
+        downstream subtrees consume it);
       * lines and paragraphs explode in ONE generator (tagged structs)
         and pivot back per document — one shuffle keyed (doc, tag,
         unit);
@@ -446,11 +440,9 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         "word_chars",
         F.aggregate(F.transform(F.col("_ww"), F.length), F.lit(0),
                     lambda acc, x: acc + x))
-    if persist_intermediate:
-        split = split.persist()
+    split = split.persist()
     _split_cache = split       # the persisted frame: later rebinds derive
-    if persist_intermediate:
-        split.count()
+    split.count()
     base = split.select(key, "word_chars")
 
     # -- line/paragraph duplicate fractions: one explode, one pivot.
@@ -523,18 +515,16 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     occ = (split.select(key, F.explode(gram_arr).alias("g"))
            .select(key, F.col("g.n").alias("n"),
                    F.posexplode("g.gs").alias("i", "gh")))
-    if persist_intermediate:
-        occ = occ.persist()
-        occ.count()
+    occ = occ.persist()
+    occ.count()
     counts = occ.groupBy(key, "n", "gh").agg(
         F.count_if(F.lit(True)).alias("cnt"),
         F.min("i").alias("min_i"))
-    if persist_intermediate:
-        counts = counts.persist()
-        counts.count()
-        # occ stays cached: the duplicate-coverage branch below is its
-        # second consumer — releasing it here would re-run the whole
-        # 9-size gram explode for that branch
+    counts = counts.persist()
+    counts.count()
+    # occ stays cached: the duplicate-coverage branch below is its
+    # second consumer — releasing it here would re-run the whole
+    # 9-size gram explode for that branch
 
     top = (counts.where(F.col("n") <= 4)
            .groupBy(key, "n")
@@ -566,13 +556,12 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         .groupBy(key, "n").agg(F.sum("wl").alias("cov")))
     cpvt = cov_chars.groupBy(key).pivot("n", [5, 6, 7, 8, 9, 10]) \
         .agg(F.first("cov"))
-    if persist_intermediate:
-        # materialize the coverage pivot (per-doc, <= 7 narrow columns)
-        # so the gram-occurrence cache can be released here — cpvt was
-        # occ's last consumer
-        cpvt = cpvt.persist()
-        cpvt.count()
-        occ.unpersist()
+    # materialize the coverage pivot (per-doc, <= 7 narrow columns) so
+    # the gram-occurrence cache can be released here — cpvt was occ's
+    # last consumer
+    cpvt = cpvt.persist()
+    cpvt.count()
+    occ.unpersist()
 
     out = (base.join(upvt, key, "left")
            .join(tpvt, key, "left")
@@ -597,13 +586,11 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         bad = F.coalesce(F.col(col), F.lit(0.0)) > thr
         cond = bad if cond is None else (cond | bad)
     out = out.withColumn("gopher_repetition_pass", ~cond)
-    if persist_intermediate:
-        # split (word/line/para arrays), counts (gram counts) and cpvt
-        # still feed the returned plan: callers release them with
-        # operators.caching.release_caches once the result is consumed
-        from .caching import track_caches
-        out = track_caches(out, _split_cache, counts, cpvt)
-    return out
+    # split (word/line/para arrays), counts (gram counts) and cpvt still
+    # feed the returned plan: callers release them with
+    # operators.caching.release_caches once the result is consumed
+    from .caching import track_caches
+    return track_caches(out, _split_cache, counts, cpvt)
 
 
 C4_TERMINAL_RE = '[.!?"]$'

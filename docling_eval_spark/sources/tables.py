@@ -13,7 +13,7 @@ consistently clustered on parquet.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 PAGES_SCHEMA_DDL = ("url string, warc_ts timestamp, html binary, "
@@ -31,9 +31,12 @@ def read_pages_table(spark: SparkSession, path: str,
 
 
 def write_pages_table(pages: DataFrame, path: str, n_buckets: int = 64,
-                      mode: str = "append") -> None:
-    """Append with bucket(url)-style clustering."""
+                      mode: str = "append") -> int:
+    """Append with bucket(url)-style clustering; returns the rows written."""
+    obs = Observation()
     (
         pages.repartition(n_buckets, F.xxhash64("url"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode(mode).parquet(path)
     )
+    return obs.get["n"]

@@ -200,6 +200,152 @@ def test_cli_curate_full_chain(spark, tmp_path):
     assert s0["sample_rate"] == 0.0
 
 
+def _python_runs(spark, execution_ids):
+    """(execution id, operator) for every Python operator that sent rows
+    to a Python worker in the given SQL executions. A cached subplan is
+    listed in the plan of every execution that reads the cache, but only
+    the execution that fills the cache runs it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = []
+    for i in execution_ids:
+        nodes = store.planGraph(i).allNodes()
+        values = store.executionMetrics(i)
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                sent = values.get(m.accumulatorId())
+                if m.name() == "data sent to Python workers" \
+                        and sent.isDefined() and sent.get() != "0.0 B":
+                    runs.append((i, node.name()))
+    return runs
+
+
+def _sql_executions(spark):
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def test_cli_curate_every_stage_one_pass(spark, tmp_path):
+    """Every curate stage on, the whole summary checked against counts
+    worked out by hand for the fixture, and the run's SQL executions
+    counted: the line dedup's two cache fills plus the output write.
+    Each Python operator (normalize, the robots.txt compiler, lang-id)
+    runs once, in the execution that fills the filtered-rows cache."""
+    from docling_eval_spark import cli
+
+    l1 = "the quick brown fox jumps over the fence."
+    l2 = "a lazy dog sleeps near the old barn today."
+    l3 = "it is a warm day for the whole town."
+    l4 = "another page shares the first line of text."
+    l5 = "but it keeps a second unique line here."
+    no_stop = "click here to read more about the offer"  # C4 drops it
+    rows = [
+        (1, "https://a.example/p1", "\n".join([l1, l2, l3])),
+        # canonical url of doc 1: dropped by the url dedup
+        (2, "https://www.a.example/p1/?utm_source=x", "\n".join([l4, l5])),
+        # disallowed by b.example's robots.txt
+        (3, "https://b.example/private/x", "\n".join([l4, l5])),
+        # German: dropped by --lang-keep en
+        (4, "https://c.example/4", "\n".join([
+            "der Hund schläft neben der alten Scheune und dem Haus.",
+            "es ist ein warmer Tag für die ganze Stadt und das Dorf.",
+            "die Kinder gehen am Morgen mit dem Lehrer in die Schule."])),
+        # 4 words: fails the Gopher word count
+        (5, "https://c.example/5", "the fox is here."),
+        # keeps two lines after the C4 line filter
+        (6, "https://c.example/6", "\n".join([l4, no_stop, l5])),
+        # one email, one IPv4 address and one phone number
+        (7, "https://c.example/7", "\n".join([
+            "the children walk to the school in the morning.",
+            "for the report write to bob@mail.example or to 10.1.2.3 now.",
+            "you can also call the desk at +4915123456789 today."])),
+        # normalize repairs the spacing, then the line dedup drops l1
+        (8, "https://c.example/8", "\n".join([
+            l1.replace(" ", "  "),
+            "they will meet at the station after the game."])),
+        # shares the 5-gram "we sold all of the" with the benchmark
+        (9, "https://c.example/9", "\n".join([
+            "we sold all of the apples at the market yesterday.",
+            "the old man and the sea is a fine book to read."])),
+        # every line seen earlier: no line kept, so not written
+        (10, "https://c.example/10", "\n".join([l2, l3])),
+        # no line ends in punctuation: C4 drops the page
+        (11, "https://c.example/11", "\n".join([
+            no_stop, "sign up now to get all of the news from us"])),
+    ]
+    inp = str(tmp_path / "docs")
+    robots = str(tmp_path / "robots")
+    benchp = str(tmp_path / "bench")
+    out = str(tmp_path / "curated")
+    summ = str(tmp_path / "summary.json")
+    spark.createDataFrame(rows, ["doc_id", "url", "text"]).write.parquet(inp)
+    spark.createDataFrame(
+        [("b.example", "User-agent: *\nDisallow: /private\n")],
+        ["domain", "robots_txt"]).write.parquet(robots)
+    spark.createDataFrame(
+        [(900, "we sold all of the pears at a fair")],
+        ["doc_id", "text"]).write.parquet(benchp)
+
+    before = _sql_executions(spark)
+    cli.main(["curate", "--input", inp, "--output", out,
+              "--min-words", "10", "--url-dedup", "--robots-txt", robots,
+              "--normalize", "--lang-id", "--lang-keep", "en",
+              "--decontaminate", benchp, "--decontam-n", "5",
+              "--summary", summ])
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = sorted(_sql_executions(spark) - before)
+
+    assert json.loads(open(summ).read()) == {
+        "n_input": 11,
+        "n_after_quality_filters": 6,      # docs 1, 6, 7, 8, 9, 10
+        "n_output": 4,                     # docs 1, 6, 7, 8
+        "pii_redacted": {"emails": 1, "ips": 1, "phones": 1},
+        "lines_seen": 3 + 2 + 3 + 2,
+        "lines_kept": 3 + 2 + 3 + 1,
+        "n_url_duplicates_dropped": 1,
+        "n_robots_disallowed_dropped": 1,
+        "n_lang_dropped": 1,
+        "normalized_changed": 1,
+        "n_contaminated_dropped": 1,
+    }
+    cur = {r.doc_id: r for r in spark.read.parquet(out).collect()}
+    assert set(cur) == {1, 6, 7, 8}
+    assert cur[6].text == "\n".join([l4, l5])
+    assert cur[8].text == "they will meet at the station after the game."
+
+    assert len(executions) == 3
+    runs = _python_runs(spark, executions)
+    assert sorted(op for _, op in runs) == \
+        ["ArrowEvalPython", "MapInPandas", "MapInPandas"]
+    assert {i for i, _ in runs} == {executions[0]}
+
+
+def test_cli_curate_keeps_other_caches(spark, tmp_path):
+    """curate releases what it persisted and nothing else: a DataFrame
+    another caller cached in the same session stays cached."""
+    from pyspark import StorageLevel
+
+    from docling_eval_spark import cli
+
+    other = spark.range(10).persist()
+    other.count()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    inp = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the fence.")],
+        ["doc_id", "text"]).write.parquet(inp)
+    try:
+        cli.main(["curate", "--input", inp,
+                  "--output", str(tmp_path / "curated"), "--min-words", "5"])
+        assert other.storageLevel != StorageLevel.NONE
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    finally:
+        other.unpersist()
+
+
 def test_cli_pack_manifest(spark, tmp_path):
     from docling_eval_spark import cli
 
@@ -238,3 +384,20 @@ def test_cli_pack_manifest(spark, tmp_path):
     assert {r.doc_id: r.shuffle_pos for r in man2} != \
         {r.doc_id: r.shuffle_pos for r in man}
     assert sum(r.n_tokens for r in man2) == total
+
+
+def test_cli_pack_single_sequence(spark, tmp_path):
+    """A corpus that fits one context window packs into one sequence."""
+    from docling_eval_spark import cli
+
+    inp = str(tmp_path / "docs")
+    summ = str(tmp_path / "pack.json")
+    spark.createDataFrame([(1, "a b c"), (2, "d e")],
+                          ["doc_id", "text"]).write.parquet(inp)
+
+    cli.main(["pack", "--input", inp, "--output", str(tmp_path / "manifest"),
+              "--ctx", "16", "--summary", summ])
+
+    s = json.loads(open(summ).read())
+    assert s["n_docs"] == 2 and s["n_tokens"] == 5
+    assert s["n_sequences"] == 1
